@@ -117,3 +117,12 @@ def test_strict_threshold_no_overmerge(spark):
     mapping = canonical_mapping(t, threshold=0.95)
     m = {r.uri: r.canonical_uri for r in mapping.collect()}
     assert "http://e/2" not in m  # Stream Engine stays separate
+
+
+def test_no_link_mapping_keeps_schema(spark):
+    """Nothing links: the empty mapping keeps the linked case's schema."""
+    t = _label_triples(spark, ["Graph Store", "Stream Engine"])
+    mapping = canonical_mapping(t, threshold=0.95)
+    assert mapping.collect() == []
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in mapping.schema] == [
+        ("uri", "string", True), ("canonical_uri", "string", True)]

@@ -383,3 +383,40 @@ def test_wire_triples_store_never_broadcast(spark, edges_parquet):
         tail = plan[m.start():m.start() + 2000]
         first_scan = re.search(r"Scan (parquet|ExistingRDD)", tail)
         assert first_scan and first_scan.group(1) == "ExistingRDD", plan
+
+
+def test_candidate_pairs_single_blocking_exchange(spark, edges_parquet):
+    """Entity-linking blocking shuffles once, on block_key: the mention
+    dedup, the block-size window and both self-join sides reuse that
+    partitioning, and only the distinct over pairs shuffles again."""
+    import re
+
+    from trustgraph_spark.operators.linking import (
+        blocking_keys,
+        candidate_pairs,
+        entity_mentions,
+    )
+
+    pairs = candidate_pairs(blocking_keys(entity_mentions(spark.read.parquet(edges_parquet))))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plan = _plan(pairs)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    shuffles = re.findall(r"^[\s:+-]*Exchange hashpartitioning\(([^)]*)\)", plan, re.M)
+    assert len(shuffles) == 2, plan
+    assert sum(s.startswith("block_key#") for s in shuffles) == 1, plan
+    assert "ReusedExchange" in plan
+
+
+def test_no_empty_create_dataframe():
+    """``createDataFrame([], ...)`` runs a Python RDD whose workers start
+    a second Python daemon (see catalyst.empty_frame); build empty frames
+    natively instead."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    sources = [root / "__spark_entry__.py", *sorted((root / "trustgraph_spark").rglob("*.py"))]
+    offenders = [str(p.relative_to(root)) for p in sources
+                 if "createDataFrame([]" in p.read_text()]
+    assert offenders == []

@@ -1,7 +1,8 @@
 """Catalyst-behavior helpers shared by operators.
 
-One entry so far: :func:`nd_guard`, the filter-pushdown pin for
-expensive post-join expressions.  Catalyst duplicates expression trees
+:func:`empty_frame` builds an empty DataFrame without a Python RDD.
+:func:`nd_guard` is the filter-pushdown pin for expensive post-join
+expressions.  Catalyst duplicates expression trees
 per reference (no plan-level sharing — see CLAUDE.md), and predicate
 pushdown SUBSTITUTES a filtered alias with its defining expression.
 For a similarity verify of the shape
@@ -20,8 +21,21 @@ again.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def empty_frame(spark: SparkSession, ddl: str) -> DataFrame:
+    """An empty DataFrame of the DDL schema ``ddl`` as a JVM-side
+    LocalRelation.  ``spark.createDataFrame`` of an empty list instead
+    runs a Python RDD whose workers carry a different
+    ``SPARK_SIMPLIFIED_TRACEBACK`` env from the Arrow UDF workers, so the
+    first such frame in a session starts a second Python daemon and its
+    own workers (~1.3 s cold on a 4-CPU host) to produce zero rows."""
+    jspark = spark._jsparkSession
+    schema = jspark.parseDataType(T._parse_datatype_string(ddl).json())
+    return DataFrame(jspark.createDataFrame(spark._jvm.java.util.ArrayList(), schema), spark)
 
 
 def nd_guard(col: Column) -> Column:

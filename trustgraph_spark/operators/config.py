@@ -30,6 +30,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .catalyst import empty_frame
+
 WORKSPACES_NAMESPACE = "__workspaces__"
 WORKSPACE_TYPE = "workspace"
 TEMPLATE_WORKSPACE = "__template__"
@@ -119,7 +121,7 @@ class ConfigService:
                  push=None):
         self.spark = spark
         self.log = (log if log is not None
-                    else spark.createDataFrame([], CONFIG_LOG_SCHEMA))
+                    else empty_frame(spark, CONFIG_LOG_SCHEMA))
         self.seq = config_version(self.log)
         self.push = push or (lambda **kw: None)
         self.pushes: list[dict] = []

@@ -10,7 +10,10 @@ self-joins (SURVEY.md §2.3).
 
 Scale design:
 - blocking bounds the candidate-pair space to within-block self-joins (never
-  an all-pairs cross join);
+  an all-pairs cross join), on ONE hash exchange on ``block_key``: the
+  mention dedup, the block-size window and the self-join all reuse that
+  partitioning, and only the distinct-pairs step shuffles again (the
+  blocking phase of task-based parallel ER, ICDE'21);
 - similarity scoring is an Arrow-vectorized pandas UDF (sanctioned seam #3);
 - connected components is the alternating large-star/small-star algorithm
   (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC'14)
@@ -24,12 +27,13 @@ Scale design:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..constants import OTYPE_URI, RDF_LABEL
 from ..uris import normalize_entity_name_col
+from .catalyst import empty_frame
 
 # ---------------------------------------------------------------------------
 # Connected components (alternating star algorithm)
@@ -117,20 +121,20 @@ def connected_components(
 
 
 def entity_mentions(triples: DataFrame) -> DataFrame:
-    """Distinct (entity URI, surface label) pairs from rdfs:label triples."""
-    return (
-        triples.where((F.col("p") == RDF_LABEL) & (F.col("otype") == "l"))
-        .select(F.col("s").alias("uri"), F.col("o").alias("label"))
-        .distinct()
+    """(entity URI, surface label) rows from rdfs:label triples; repeats
+    are dropped once, after blocking, by candidate_pairs."""
+    return triples.where((F.col("p") == RDF_LABEL) & (F.col("otype") == "l")).select(
+        F.col("s").alias("uri"), F.col("o").alias("label")
     )
 
 
 def blocking_keys(mentions: DataFrame) -> DataFrame:
     """Candidate-generation blocking keys per mention (SURVEY.md §2.3 V-row):
     normalized full name, 4-char prefix, and sorted token signature. One row
-    per (uri, key). Hot keys (stop-word-like prefixes) are bounded downstream
-    by candidate_pairs' max_block_size cap, so no length bucketing — length
-    buckets split near-duplicates at bucket boundaries."""
+    per (mention, key); candidate_pairs drops repeats. Hot keys
+    (stop-word-like prefixes) are bounded downstream by candidate_pairs'
+    max_block_size cap, so no length bucketing — length buckets split
+    near-duplicates at bucket boundaries."""
     m = mentions.withColumn("norm", normalize_entity_name_col(F.col("label")))
     keys = m.select(
         "uri",
@@ -141,21 +145,30 @@ def blocking_keys(mentions: DataFrame) -> DataFrame:
             F.array_join(F.array_sort(F.split("norm", "-")), "-"),
         ).alias("keys"),
     )
-    return keys.select("uri", "norm", F.explode("keys").alias("block_key")).where(
+    # explode_outer: a plain explode of the computed keys array makes
+    # Catalyst infer a size(keys) > 0 filter with the whole normalization
+    # inlined three times (as in dedup.shingles); != "" drops the nulls
+    return keys.select("uri", "norm", F.explode_outer("keys").alias("block_key")).where(
         F.col("block_key") != ""
-    ).distinct()
+    )
 
 
 def candidate_pairs(blocked: DataFrame, max_block_size: int = 1000) -> DataFrame:
-    """Within-block self-join -> distinct unordered candidate pairs.
+    """Within-block self-join -> distinct unordered candidate pairs, on one
+    hash exchange on ``block_key``: the (block_key, uri, norm) dedup, the
+    block-size window and both join sides reuse that partitioning, so the
+    only other exchange is the final distinct over pairs (one pair can
+    share several blocks).
 
     Blocks larger than max_block_size are dropped (stop-word-like keys whose
     quadratic blowup would dominate at scale; the name-equality key always
     survives because equal names imply equal URIs already).
     """
-    sizes = blocked.groupBy("block_key").agg(F.count("*").alias("n"))
-    small = blocked.join(
-        sizes.where(F.col("n") <= max_block_size).select("block_key"), "block_key"
+    small = (
+        blocked.repartition("block_key")
+        .distinct()
+        .withColumn("n", F.count("*").over(Window.partitionBy("block_key")))
+        .where(F.col("n") <= max_block_size)
     )
     a = small.select("block_key", F.col("uri").alias("uri_a"), F.col("norm").alias("norm_a"))
     b = small.select("block_key", F.col("uri").alias("uri_b"), F.col("norm").alias("norm_b"))
@@ -218,11 +231,16 @@ def canonical_mapping(
     mentions = entity_mentions(triples)
     blocked = blocking_keys(mentions)
     pairs = candidate_pairs(blocked, max_block_size=max_block_size)
-    edges = match_edges(pairs, threshold=threshold).localCheckpoint()
-    if edges.isEmpty():
+    # the "did anything link?" probe rides the checkpoint job
+    linked = Observation("linked")
+    edges = (
+        match_edges(pairs, threshold=threshold)
+        .observe(linked, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    if linked.get["n"] == 0:
         # nothing links (the common strict-mode case): skip the CC loop
-        spark = edges.sparkSession
-        return spark.createDataFrame([], "uri string, canonical_uri string")
+        return empty_frame(edges.sparkSession, "uri string, canonical_uri string")
     comp = connected_components(edges, "src", "dst")
     canon = comp.groupBy("component").agg(F.min("node").alias("canonical_uri"))
     return (

@@ -46,6 +46,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .catalyst import empty_frame
+
 # Wire term, one RDF-star nesting level deep (practical grammar: the
 # reference recurses, but requests only ever carry one level — the
 # storage rows are <<s p o>> with scalar terms).
@@ -203,7 +205,7 @@ def execute_triples_requests(
     if not branches:
         empty = "req_id string, s string, p string, o string, " \
                 "otype string, dtype string, lang string, g string"
-        return decoded.sparkSession.createDataFrame([], empty)
+        return empty_frame(decoded.sparkSession, empty)
 
     hits = reduce(DataFrame.unionByName, branches)
     w = Window.partitionBy(*sig_cols).orderBy("g", "s", "p", "o", "otype")

@@ -7,9 +7,15 @@ The Spark shape of the reference ingest dataflow (SURVEY.md §3.1):
        edges / quads_by_entity / nodes / entity_contexts
 
 Each stage writes a parquet "table" under a warehouse directory (stand-in
-for Iceberg — the Iceberg runtime jar is not in this image; the layout and
-commit protocol are identical: write-then-atomic-rename ≈ snapshot commit)
-plus a `_lineage` row keyed by (run stage, input fingerprint). A rerun
+for Iceberg — the Iceberg runtime jar is not in this image). A snapshot is
+the data files plus a `_manifest.json` holding the written schema and each
+file's footer row count, renamed into place together: the manifest is what
+an Iceberg snapshot's manifest list is, so reading a table, its row count
+and its per-file histogram cost no Spark job. The manifest's name starts
+with `_`, so Spark and pyarrow skip it when they list data files. A table
+without a manifest counts as absent, so a warehouse written before
+manifests existed recomputes its stages. Each stage also writes a
+`_lineage` row keyed by (run stage, input fingerprint). A rerun
 whose stage inputs are unchanged skips the stage and reuses its output —
 checkpoint-based resumability per the north_rule. The reference analog is
 per-processor Prometheus metrics + librarian-tracked document state
@@ -24,10 +30,13 @@ import os
 import re
 import shutil
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .operators.chunking import assemble_turn_chunks
 from .operators.extract import (
@@ -48,6 +57,7 @@ from .operators.materialize import (
 from .operators.provenance import subgraph_provenance_triples
 
 LINEAGE_DIR = "_lineage"
+MANIFEST = "_manifest.json"
 
 
 def _partition_histogram(df: DataFrame) -> list[list[int]]:
@@ -63,31 +73,43 @@ def _partition_histogram(df: DataFrame) -> list[list[int]]:
     return [[int(r.pid), int(r["count"])] for r in rows]
 
 
-def _file_histogram(df: DataFrame) -> list[list[int]]:
-    """Per-FILE row counts for a parquet-backed frame, read from the
-    footers on the driver — the checkpointed-stage lineage histogram.
-    The earlier shape ran _partition_histogram's groupBy + collect over
-    the read-back, i.e. one extra FULL SCAN of every stage output per
-    stage (the 42M-row quads stage re-read entirely for a diagnostic
-    record); footer metadata carries the same per-unit row distribution
-    at zero scan cost.  Falls back to the scan-based histogram when the
-    frame has no backing files (cached stage outputs)."""
-    files = sorted(
-        uri[7:] if uri.startswith("file://") else
-        (uri[5:] if uri.startswith("file:") else uri)
-        for uri in df.inputFiles()
-    )
-    if not files:
-        return _partition_histogram(df)
-    import pyarrow.parquet as pq
+def _write_manifest(table_dir: str, schema: T.StructType) -> None:
+    """Describe a written parquet directory: the schema and every data
+    file (relative path, footer row count), read on the driver from the
+    parquet footers — no Spark job, no data scan."""
+    files = []
+    for dirpath, dirnames, filenames in os.walk(table_dir):
+        dirnames[:] = sorted(d for d in dirnames if not d.startswith(("_", ".")))
+        for name in sorted(filenames):
+            if name.endswith(".parquet") and not name.startswith(("_", ".")):
+                path = os.path.join(dirpath, name)
+                files.append([os.path.relpath(path, table_dir),
+                              pq.ParquetFile(path).metadata.num_rows])
+    with open(os.path.join(table_dir, MANIFEST), "w") as f:
+        json.dump({"schema": schema.jsonValue(), "files": files}, f)
 
-    out = []
-    for i, path in enumerate(files):
-        try:
-            out.append([i, int(pq.ParquetFile(path).metadata.num_rows)])
-        except Exception:
-            return _partition_histogram(df)
-    return out
+
+_JOB_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+
+@contextmanager
+def _job_group(spark: SparkSession, group: str):
+    """Run the body's Spark jobs in ``group``, then restore the calling
+    thread's own job group and description.  Yields a callable that,
+    after the body, returns how many jobs the body started in the group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
+    before = set(tracker.getJobIdsForGroup(group))
+    sc.setJobGroup(group, group)
+    try:
+        yield lambda: len(set(tracker.getJobIdsForGroup(group)) - before)
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+        # the status store is fed by the listener bus; drain it so the
+        # count includes the body's last job
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
 
 
 @dataclass
@@ -138,8 +160,15 @@ def _fingerprint_df(df: DataFrame) -> str:
 
 
 class Warehouse:
-    """Parquet-backed table namespace with atomic-rename commits and a
-    lineage log. API mirrors what an Iceberg catalog would provide."""
+    """Parquet-backed table namespace with snapshot commits and a lineage
+    log. API mirrors what an Iceberg catalog would provide.
+
+    A committed table is a directory holding the data files and
+    ``_manifest.json``: the written frame's schema and each data file's
+    footer row count.  ``write`` builds the snapshot in a temp dir and
+    swaps it in by renames; at every instant ``path(table)`` holds either
+    the previous snapshot or the new one, never a mix.  ``exists``
+    and ``read`` consult only the manifest."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -150,21 +179,48 @@ class Warehouse:
         return os.path.join(self.root, table)
 
     def exists(self, table: str) -> bool:
-        return os.path.exists(os.path.join(self.path(table), "_SUCCESS"))
+        return os.path.exists(os.path.join(self.path(table), MANIFEST))
+
+    def manifest(self, table: str) -> dict:
+        with open(os.path.join(self.path(table), MANIFEST)) as f:
+            return json.load(f)
 
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table))
+        """The committed snapshot, with the manifest's schema: no
+        schema-inference job."""
+        schema = T.StructType.fromJson(self.manifest(table)["schema"])
+        return self.spark.read.schema(schema).parquet(self.path(table))
 
     def write(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
-        tmp = self.path(table) + ".__tmp__"
         final = self.path(table)
+        tmp = final + ".__tmp__"
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(tmp)
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.replace(tmp, final)
+        _write_manifest(tmp, df.schema)
+        self._swap(tmp, final)
+
+    @staticmethod
+    def _swap(tmp: str, final: str) -> None:
+        """Rename-swap commit: the previous snapshot moves aside, the new
+        one moves in, then the previous one is deleted.  If moving the new
+        one in fails, the previous one is moved back; a process killed
+        between the two renames leaves it complete at ``<table>.__old__``."""
+        old = final + ".__old__"
+        if os.path.exists(old):
+            shutil.rmtree(old)
+        had_previous = os.path.exists(final)
+        if had_previous:
+            os.replace(final, old)
+        try:
+            os.replace(tmp, final)
+        except BaseException:
+            if had_previous:
+                os.replace(old, final)
+            raise
+        if had_previous:
+            shutil.rmtree(old)
 
     def write_bucketed(
         self,
@@ -272,11 +328,18 @@ class Pipeline:
         input_df: DataFrame,
         build,
         deps: list[str] | None = None,
-        partition_by: list[str] | None = None,
     ) -> DataFrame:
         """deps: upstream stage names whose output fingerprints identify
         this stage's input; stages with no deps (roots) fingerprint the
-        input DataFrame itself."""
+        input DataFrame itself. The stage's Spark jobs run in job group
+        ``pipeline:<stage>`` and their count lands in
+        ``metrics[stage]["jobs"]``."""
+        with _job_group(self.spark, f"pipeline:{stage}") as jobs:
+            out = self._stage(run_id, stage, input_df, build, deps)
+        self.metrics[stage]["jobs"] = jobs()
+        return out
+
+    def _stage(self, run_id, stage, input_df, build, deps) -> DataFrame:
         if deps:
             fp_in = ":".join(f"{d}={self._stage_fps[d]}" for d in deps)
         else:
@@ -319,19 +382,17 @@ class Pipeline:
             return self.wh.read(stage)
 
         t0 = time.monotonic()
-        out = build(input_df)
-        self.wh.write(out, stage, partition_by=partition_by)
+        self.wh.write(build(input_df), stage)
         stored = self.wh.read(stage)
-        rows = stored.count()
+        files = self.wh.manifest(stage)["files"]
+        rows = sum(n for _, n in files)
         wall = time.monotonic() - t0
-        nparts = stored.rdd.getNumPartitions()
         extra = (
-            {"partitions": _file_histogram(stored)}
+            {"partitions": [[i, n] for i, (_, n) in enumerate(files)]}
             if self.config.lineage_histograms else {}
         )
-        self.wh.log_lineage(
-            run_id, stage, fp, rows, nparts, wall, extra=extra,
-        )
+        # a checkpointed stage's partitions are its snapshot's data files
+        self.wh.log_lineage(run_id, stage, fp, rows, len(files), wall, extra=extra)
         self.metrics[stage] = {"skipped": False, "rows": rows, "wall_sec": round(wall, 3)}
         self._stage_fps[stage] = hashlib.sha256(
             f"{fp}|{rows}".encode()
